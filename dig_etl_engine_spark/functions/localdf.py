@@ -19,10 +19,15 @@ list path otherwise. The fallback matters for exactness:
   on the Arrow path but stays NaN on the list path — so any NaN forces
   the fallback;
 * naive ``datetime``/``Decimal``/nested values have their own coercion
-  rules per path — conservatively fall back.
+  rules per path — conservatively fall back;
+* a value whose class is not the one its field type takes: the Arrow
+  path casts it (2.5 into BIGINT truncates, 5 into DATE is a day count,
+  ``b"ab"`` into STRING loses its ``repr``) where the stock path raises
+  or renders it differently — so the field types gate the fast path too.
 
 Both paths produce identical rows for None/bool/int/finite-float/str/
-bytes/date scalars (pinned by tests/test_localdf.py).
+bytes/date scalars in BOOLEAN/integral/FLOAT-DOUBLE/STRING/BINARY/DATE
+fields respectively (pinned by tests/test_localdf.py).
 """
 
 from __future__ import annotations
@@ -31,8 +36,15 @@ import datetime as _dt
 import math
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _SCALAR_OK = (bool, int, str, bytes)
+
+# the one Python class each field type takes on both paths alike
+_FIELD_CLASS = {T.BooleanType: bool, T.ByteType: int, T.ShortType: int,
+                T.IntegerType: int, T.LongType: int, T.FloatType: float,
+                T.DoubleType: float, T.StringType: str, T.BinaryType: bytes,
+                T.DateType: _dt.date}
 
 
 def _arrow_safe(rows) -> bool:
@@ -50,6 +62,15 @@ def _arrow_safe(rows) -> bool:
     return True
 
 
+def _types_agree(rows, schema: T.StructType) -> bool:
+    """Every non-null value is exactly the class its field type takes
+    (``bool`` is not an ``int`` here, nor a ``datetime`` a ``date``);
+    a field of any other type may only hold nulls."""
+    want = [_FIELD_CLASS.get(type(f.dataType)) for f in schema.fields]
+    return all(v is None or type(v) is c
+               for r in rows for v, c in zip(r, want))
+
+
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Build a DataFrame from a small driver-side ``rows`` list (tuples
     or Rows) and an explicit ``schema`` (DDL string or StructType),
@@ -61,16 +82,15 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
         return spark.createDataFrame(rows, schema)
     import pandas as pd
 
-    from pyspark.sql.types import StructType
-    if isinstance(schema, StructType):
-        names = schema.fieldNames()
-    else:
-        from pyspark.sql.types import _parse_datatype_string
-        names = _parse_datatype_string(schema).fieldNames()
+    struct = schema if isinstance(schema, T.StructType) \
+        else T._parse_datatype_string(schema)
+    names = struct.fieldNames()
     if any(len(r) != len(names) for r in rows):
         # pandas would silently NULL-pad/truncate ragged tuples where
         # the stock path raises a length-mismatch error — keep the
         # loud failure (r13 review).
+        return spark.createDataFrame(rows, schema)
+    if not _types_agree(rows, struct):
         return spark.createDataFrame(rows, schema)
     pdf = pd.DataFrame(rows, columns=names, dtype=object)
     try:

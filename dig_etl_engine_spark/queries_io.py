@@ -134,7 +134,13 @@ def _stream_parts(spark: SparkSession, n: int | None = None):
     # keys-per-task; 16 is the fixture-scale default, kept after an
     # 8-vs-16 interleaved A/B where 16 won both pairs).
     if n is None:
-        n = int(os.environ.get("SPARK_GRAFT_STREAM_PARTS", "16"))
+        raw = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "16")
+        if not raw.strip().isdecimal() or int(raw) < 1:
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_PARTS={raw!r}: expected a positive "
+                "integer (the shuffle partition count of a stream's "
+                "first start)")
+        n = int(raw)
     with _STREAM_CONF_LOCK:
         ck = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
         old = spark.conf.get("spark.sql.shuffle.partitions")

@@ -533,7 +533,8 @@ def upsert_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2 at 100 TB shape (`sinks/kg_table.py:upsert_partitioned`): the
     events table is split into two halves and merged into a hash-bucket-
     partitioned KG table in two batches — only the partitions a batch
-    touches are rewritten (dynamic partition overwrite). The final table
+    touches are rewritten, one file per bucket, under one manifest
+    commit. The final table
     must equal the one-shot relational last-write-wins, which the oracle
     states."""
     import os as _os

@@ -417,14 +417,28 @@ def create_table_if_not_exists(spark: SparkSession, path: str,
         return True
 
 
-def dedupe_last_write_wins(df: DataFrame, key_col: str = "doc_id",
+def dedupe_last_write_wins(df: DataFrame,
+                           key_col: str | list[str] = "doc_id",
                            order_col: str = "kafka_offset") -> DataFrame:
-    """Keep the row with the greatest ``order_col`` per key — ES overwrite
-    semantics made deterministic (ties broken by the order column only;
-    give every record a unique offset upstream)."""
+    """Keep the row with the greatest ``order_col`` per key (one column,
+    or a list of columns) — ES overwrite semantics made deterministic
+    (ties broken by the order column only; give every record a unique
+    offset upstream)."""
     w = Window.partitionBy(key_col).orderBy(F.col(order_col).desc())
     return (df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
+
+
+def _dedupe_per_bucket(df: DataFrame, key_col: str,
+                       order_col: str) -> DataFrame:
+    """:func:`dedupe_last_write_wins` over a ``_kb``-bucketed frame with
+    every bucket's rows in ONE partition. ``_kb`` is a function of the
+    key, so the window over (``_kb``, key) keeps the same winners as the
+    window over the key alone, and the repartition on ``_kb`` is the
+    window's only exchange. A ``partitionBy("_kb")`` write of the result
+    emits exactly one file per bucket."""
+    return dedupe_last_write_wins(df.repartition("_kb"),
+                                  ["_kb", key_col], order_col)
 
 
 def _recover_upsert(target_path: str) -> None:
@@ -1328,10 +1342,11 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
     the table is laid out as ``_kb=pmod(xxhash64(key), buckets)`` partition
     directories (uniform — no skewed dirs), and the merge:
 
-      1. buckets the batch and collects its touched bucket ids (≤
-         ``buckets`` values — a driver-safe list);
-      2. reads back only those partitions (partition pruning: the
-         ``isin`` filter never opens untouched directories);
+      1. buckets and deduplicates the batch, caches it, and collects
+         its touched bucket ids (≤ ``buckets`` values — a driver-safe
+         list);
+      2. reads back only those buckets' directories, at the table's
+         probed schema (untouched directories are never opened);
       3. last-write-wins merges batch ∪ touched-existing;
       4. writes the merged buckets to a dot-prefixed staging dir inside
          the table, moves each to an immutable hidden epoch dir
@@ -1339,6 +1354,12 @@ def upsert_partitioned(spark: SparkSession, target_path: str,
          manifest replace (:func:`_publish_staged_buckets` →
          :func:`_commit_buckets` — the protocol shared with
          :func:`compact_partitioned` and the BM25 stats epochs).
+
+    The caller's plan behind ``batch`` is evaluated once: steps 1 and 4
+    both read the cached frame. Every dedup runs over (``_kb``, key)
+    after a repartition on ``_kb``, so each bucket's rows sit in one
+    task and every written bucket — on a merge and on the birth write
+    alike — is exactly one parquet file.
 
     Step 4 deliberately avoids Spark's dynamic partition overwrite: its
     job commit deletes each touched partition directory before moving
@@ -1650,41 +1671,48 @@ def _upsert_partitioned_locked(spark: SparkSession, target_path: str,
                 frame=_STRAY_FRAME)
 
     kb = _bucket_expr(batch, key_col, buckets, widened=widened)
-    b = dedupe_last_write_wins(batch.withColumn("_kb", kb),
-                               key_col, order_col)
+    b = _dedupe_per_bucket(batch.withColumn("_kb", kb), key_col, order_col)
     if stray is not None:
         # the bucket expression is still rebuilt from the (aligned)
         # stray frame itself — an expression built from another frame's
         # schema would pick the widening cast from the wrong dtype
         stray = stray.withColumn(
             "_kb", _bucket_expr(stray, key_col, buckets, widened=widened))
-        b = dedupe_last_write_wins(
+        b = _dedupe_per_bucket(
             stray.unionByName(b, allowMissingColumns=True),
             key_col, order_col)
-    if has_kb:
-        touched = [r[0] for r in b.select("_kb").distinct().collect()]
-        touched_dirs = [os.path.join(target_path, live[n])
-                        for n in sorted(touched) if n in live]
-        if touched_dirs:
-            # partition pruning by construction: only the touched
-            # buckets' directories are ever opened (the pre-manifest
-            # version read a _kb=* glob and relied on Catalyst pruning
-            # an isin filter over the inferred column — same I/O,
-            # but the pruning is now structural, not optimizer-owed)
-            existing = spark.read.parquet(*touched_dirs)
-            existing = existing.withColumn(
-                "_kb", _bucket_expr(existing, key_col, buckets,
-                                    widened=widened))
-            b = dedupe_last_write_wins(
-                existing.unionByName(b, allowMissingColumns=True),
-                key_col, order_col)
     token = uuid.uuid4().hex[:8]
     staging = os.path.join(target_path, f".upsert_tmp_{token}")
-    # drop the swept-gen sidecar before the first byte of new on-disk
-    # state: a crash anywhere past this line leaves orphans AND no
-    # sidecar, so the next entry runs the full recovery sweep
-    _invalidate_swept_gen(target_path)
-    b.write.partitionBy("_kb").parquet(staging)
+    # with live buckets, the touched collect and the write both read b:
+    # cache it so the caller's plan (extraction, dedup, joins) runs once
+    if has_kb:
+        b.persist()
+    try:
+        merged = b
+        if has_kb:
+            touched = [r[0] for r in b.select("_kb").distinct().collect()]
+            touched_dirs = [os.path.join(target_path, live[n])
+                            for n in sorted(touched) if n in live]
+            if touched_dirs:
+                # only the touched buckets' directories are ever opened,
+                # read at the probed schema — _align_to_table makes it
+                # the contract of every bucket, so no second inference
+                existing = spark.read.schema(existing_all.schema) \
+                    .parquet(*touched_dirs)
+                existing = existing.withColumn(
+                    "_kb", _bucket_expr(existing, key_col, buckets,
+                                        widened=widened))
+                merged = _dedupe_per_bucket(
+                    existing.unionByName(b, allowMissingColumns=True),
+                    key_col, order_col)
+        # drop the swept-gen sidecar before the first byte of new on-disk
+        # state: a crash anywhere past this line leaves orphans AND no
+        # sidecar, so the next entry runs the full recovery sweep
+        _invalidate_swept_gen(target_path)
+        merged.write.partitionBy("_kb").parquet(staging)
+    finally:
+        if has_kb:
+            b.unpersist()
     # the tripwire set for the publish step: every staged bucket must
     # come from the batch/stray fold (= touched, computed above) — on
     # a birth write there are no incumbents to protect
@@ -1718,13 +1746,13 @@ def compact_partitioned(spark: SparkSession, target_path: str, *,
                         target_file_bytes: int = 128 << 20,
                         min_files: int = 2,
                         lock_timeout: float = 300.0) -> int:
-    """Small-file compaction for the bucketed KG table. Every micro-batch
-    upsert rewrites its touched buckets with fresh files; over a day of
-    batches a hot bucket accumulates hundreds of small parquet files and
-    scan cost grows with file count, not data size. Rewrite each bucket
-    holding ≥ ``min_files`` files down to ceil(bytes/target) files;
-    untouched buckets keep their exact files. Returns the number of
-    buckets compacted.
+    """Small-file compaction for the bucketed KG table. An upsert
+    rewrites each touched bucket whole, as one file, into a fresh epoch
+    directory, so upserts never fragment a bucket; a bucket holds many
+    files only when another writer placed it (:func:`rebucket_partitioned`,
+    a pre-manifest layout, a hand-placed directory). Rewrite each bucket holding ≥ ``min_files``
+    files down to ceil(bytes/target) files; untouched buckets keep their
+    exact files. Returns the number of buckets compacted.
 
     Each bucket is compacted to a hidden immutable epoch directory
     (``.kbe_<n>_<token>`` — never read until referenced), then ALL

@@ -514,6 +514,87 @@ class TestUpsert:
         for n in touched & set(live_before):
             assert live_after[n] != live_before[n]
 
+    @staticmethod
+    def _epoch_files(p, before=frozenset()):
+        """Parquet file count of every epoch dir not in ``before``."""
+        return {d: len(glob.glob(os.path.join(p, d, "*.parquet")))
+                for d in os.listdir(p)
+                if d.startswith(".kbe_") and d not in before}
+
+    def test_partitioned_upsert_evaluates_batch_once(self, spark, tmp_path):
+        """The touched-bucket collect and the write both read the batch;
+        the caller's plan behind it (here a Python UDF filter that counts
+        its calls) must run once per row, not once per action."""
+        p = str(tmp_path / "t")
+        kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
+            [(f"k{i}", 1, "base") for i in range(40)], self.SCHEMA),
+            buckets=8)
+        calls = spark.sparkContext.accumulator(0)
+
+        def keep(v):
+            calls.add(1)
+            return True
+
+        rows = [(f"k{i}", 5, "new") for i in range(0, 60, 3)]
+        batch = spark.createDataFrame(rows, self.SCHEMA) \
+            .filter(F.udf(keep, "boolean")("v"))
+        kg_table.upsert_partitioned(spark, p, batch, buckets=8)
+        assert calls.value == len(rows)
+        got = {r.doc_id: r.v
+               for r in kg_table.read_partitioned(spark, p).collect()}
+        assert got == {**{f"k{i}": "base" for i in range(40)},
+                       **{k: v for k, _, v in rows}}
+
+    def test_partitioned_upsert_one_file_per_bucket(self, spark, tmp_path):
+        """Every bucket a commit writes holds exactly one parquet file,
+        whatever the shuffle width (coalescing off, so a merge shuffled
+        on the key alone would spread a bucket over many tasks), on the
+        birth write and on a merge; and a steady-state commit fires a
+        fixed number of Spark jobs."""
+        p = str(tmp_path / "t")
+        expected = {f"k{i}": (1, "base") for i in range(200)}
+        coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+        restore = spark.conf.get(coalesce)
+        spark.conf.set(coalesce, "false")
+        try:
+            kg_table.upsert_partitioned(spark, p, spark.createDataFrame(
+                [(k, o, v) for k, (o, v) in expected.items()],
+                self.SCHEMA), buckets=8)
+            born = self._epoch_files(p)
+            assert len(born) == 8 and set(born.values()) == {1}
+            rows = [(f"k{i}", 2, "new") for i in range(0, 260, 5)]
+            kg_table.upsert_partitioned(
+                spark, p, spark.createDataFrame(rows, self.SCHEMA),
+                buckets=8)
+        finally:
+            spark.conf.set(coalesce, restore)
+        merged = self._epoch_files(p, set(born))
+        assert merged and set(merged.values()) == {1}
+        expected.update((k, (o, v)) for k, o, v in rows)
+
+        # one steady-state commit (default conf), counted under a job
+        # group: the probe read, three for the touched collect (the
+        # batch shuffle, the distinct's two stages), two for the write
+        # (the merge shuffle, the write)
+        sc = spark.sparkContext
+        rows = [(f"k{i}", 3, "again") for i in range(1, 100, 7)]
+        before = set(self._epoch_files(p))
+        sc.setJobGroup("upsert-once", "one steady-state commit")
+        try:
+            kg_table.upsert_partitioned(
+                spark, p, spark.createDataFrame(rows, self.SCHEMA),
+                buckets=8)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        assert len(sc.statusTracker().getJobIdsForGroup("upsert-once")) == 6
+        assert set(self._epoch_files(p, before).values()) == {1}
+        expected.update((k, (o, v)) for k, o, v in rows)
+        got = {r.doc_id: (r.kafka_offset, r.v)
+               for r in kg_table.read_partitioned(spark, p).collect()}
+        assert got == expected
+
 
 class TestStreamingIngest:
     def test_quarantine_and_upsert(self, spark, tmp_path):

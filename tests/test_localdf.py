@@ -13,9 +13,11 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import types as T
 
-from dig_etl_engine_spark.functions.localdf import _arrow_safe, local_df
+from dig_etl_engine_spark.functions.localdf import (
+    _arrow_safe, _types_agree, local_df)
 
 
 def _both(spark, rows, schema):
@@ -62,6 +64,36 @@ def test_nested_and_datetime_fall_back(spark):
     rows = [(1, [1, 2]), (2, [3])]
     out = local_df(spark, rows, "id INT, xs ARRAY<INT>").collect()
     assert sorted((r["id"], tuple(r["xs"])) for r in out) == [(1, (1, 2)), (2, (3,))]
+
+
+@pytest.mark.parametrize("ddl,value", [
+    ("TIMESTAMP", dt.date(2020, 1, 2)),
+    ("BIGINT", 2.5),
+    ("BIGINT", True),
+    ("DOUBLE", 3),
+    ("DATE", 5),
+    ("STRING", b"ab"),
+    ("BINARY", "ab"),
+    ("DECIMAL(10,2)", 3),
+])
+def test_field_type_mismatch_takes_stock_path(spark, ddl, value):
+    # each value class passes _arrow_safe, but its field type is not the
+    # one that class maps to: the Arrow path would cast it (2.5 → 2,
+    # 5 → 1970-01-06, b"ab" → "ab") where the stock path raises or
+    # renders it differently — local_df must do what the stock path does
+    schema = f"id INT, v {ddl}"
+    rows = [(1, value), (2, None)]
+    assert _arrow_safe(rows)
+    assert not _types_agree(rows, T._parse_datatype_string(schema))
+
+    def outcome(build):
+        try:
+            return sorted((tuple(r) for r in build().collect()), key=str)
+        except Exception as e:  # noqa: BLE001 - the failure IS the outcome
+            return type(e)
+
+    assert outcome(lambda: local_df(spark, rows, schema)) == \
+        outcome(lambda: spark.createDataFrame(rows, schema))
 
 
 def test_structtype_and_empty(spark):

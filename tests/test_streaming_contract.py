@@ -110,3 +110,26 @@ def test_dead_process_scratch_roots_are_reaped(tmp_path, monkeypatch):
     assert not dead.exists()          # dead pid reaped
     assert live.exists()              # malformed name untouched
     assert other_live.exists()        # live pid untouched
+
+
+def test_malformed_stream_parts_names_the_variable(spark, monkeypatch):
+    """A bad ``SPARK_GRAFT_STREAM_PARTS`` fails before any conf is set,
+    with an error naming the variable and the value."""
+    import re
+
+    import pytest
+
+    from dig_etl_engine_spark import queries_io as qio
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    for bad in ("sixteen", "", "0", "-4", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", bad)
+        with pytest.raises(ValueError, match=re.escape(
+                f"SPARK_GRAFT_STREAM_PARTS={bad!r}")):
+            with qio._stream_parts(spark):
+                pass
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", " 8 ")
+    with qio._stream_parts(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
